@@ -187,13 +187,13 @@ def _q_tc(strategy: str, n_blocks: int | None = None):
 
 def _q_tc_blocked_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked TC on the planted-mega-hub graph (vertex 1 adjacent to every
-    part) with the hub route EXPLICITLY engaged (threshold 500: the mega
-    hub and the densest parts route through the broadcast bitset/galloping
-    probes) — must agree exactly with the plain 3-way-join oracle. The
-    route is opt-in since round 3 (BENCH.md §5h); this query keeps the
-    whole hub path driver-verified every round."""
+    part) through the default route — must agree exactly with the plain
+    3-way-join oracle. The degree orientation bounds the hub's
+    out-adjacency, so the default plan needs no hub special case
+    (BENCH.md §5h, §8b); this query keeps that claim oracle-checked on
+    the skewed graph."""
     edges = tpch_graph.copurchase_hub_edges(spark, sf_dir)
-    return triangles.count_triangles(edges, strategy="blocked", hub_threshold=500)
+    return triangles.count_triangles(edges, strategy="blocked")
 
 
 def _q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,8 +501,8 @@ def _q_ktruss4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_edge_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total per-edge workload estimate (da+db-max)*log2(max+2) — the
-    Fox-style cost model (reference Fox/tc.cu:18-33) used for equal-work
-    partitioning."""
+    Fox-style cost model (reference Fox/tc.cu:18-33) behind the
+    reference's workload balancing."""
     from accelerating_tc_spark.plans.blocking import edge_workload
 
     oriented = prep.orient_by_degree(_canonical(spark, sf_dir))

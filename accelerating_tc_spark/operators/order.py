@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.ranking import dense_rank_ids
 from . import components, prep, supersteps
 
-_PACK_SHIFT = 6  # 64-bit words (matches functions/intersect.py)
+_PACK_SHIFT = 6  # 64-bit words (BSR PACK_WIDTH, reference util.hpp:21-29)
 
 
 def balanced_interleave_relabel(

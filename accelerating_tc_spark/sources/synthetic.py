@@ -65,8 +65,9 @@ def powerlaw_edges(
 
 
 def hub_edges(spark: SparkSession, n_vertices: int = 200, seed: int = 42) -> DataFrame:
-    """One vertex adjacent to 50% of the rest + a random sprinkle — exercises
-    hub splitting / the Bisson big-row analog (FIXTURES.md edges_skewed_hub)."""
+    """One vertex adjacent to 50% of the rest + a random sprinkle — the
+    Bisson big-row case, exercising every plan under a planted hub
+    (FIXTURES.md edges_skewed_hub)."""
     rng = np.random.default_rng(seed)
     hub_nbrs = rng.choice(np.arange(1, n_vertices), size=n_vertices // 2, replace=False)
     pairs = [(0, int(v)) for v in hub_nbrs]

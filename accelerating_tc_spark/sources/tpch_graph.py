@@ -38,9 +38,9 @@ WHERE a.user_id < b.user_id
 
 # Skewed fixture: mod-5 sparsified co-purchase graph UNION a planted
 # mega-hub — vertex 1 adjacent to EVERY part (degree ≈ |parts|, hundreds of
-# times the sparsified average). Exercises the hub route of the blocked
-# triangle count; exactly expressible in SQL so the oracle builds the same
-# graph.
+# times the sparsified average). Exercises the blocked triangle count's
+# default route under extreme degree skew; exactly expressible in SQL so
+# the oracle builds the same graph.
 COPURCHASE_HUB_EDGES_SQL = """
 SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
 FROM lineitem a

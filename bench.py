@@ -336,8 +336,6 @@ def scaling_single(cores: int, n_vertices: int | None = None, n_edges_req: int |
     # to reach steady state and would swamp the comparison. Then min-of-3
     # measured runs — same job at both levels; n_blocks is auto-derived per
     # level (the primary protocol) unless SPARK_GRAFT_SCALE_BLOCKS pins it.
-    # The cached degree table feeds hub detection so graph prep stays
-    # outside the measured window.
     from accelerating_tc_spark.plans.blocking import auto_n_blocks
 
     chosen_b = SCALE_BLOCKS or auto_n_blocks(
@@ -347,13 +345,13 @@ def scaling_single(cores: int, n_vertices: int | None = None, n_edges_req: int |
     n_warmups = int(os.environ.get("SPARK_GRAFT_SCALE_WARMUPS", "2"))
     spark.sparkContext.setJobGroup("warmup", "scaling warm-up runs")
     for _ in range(n_warmups):
-        triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS, deg=deg).collect()
+        triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS).collect()
     spark.sparkContext.setJobGroup("measure", "scaling measured runs")
     dt = float("inf")
     tri = 0
     for _ in range(n_measures):
         t0 = time.time()
-        tri = triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS, deg=deg).collect()[0][
+        tri = triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS).collect()[0][
             "triangles"
         ]
         dt = min(dt, time.time() - t0)
@@ -550,9 +548,11 @@ def run_scaling() -> None:
 
 
 def run_skew() -> None:
-    """Hub-routing A/B on a planted-mega-hub Zipf graph: per-task kernel
-    max/median seconds and wall time with the hub route ON (auto threshold)
-    vs OFF (threshold=2^62) — the skew evidence for the blocked TC."""
+    """Blocked TC on a planted-mega-hub Zipf graph: wall time and per-task
+    kernel max/median seconds of the cogroup plan (pinned B=16), with
+    parity against the default auto-route count. The degree orientation
+    bounds the hub's out-adjacency, so the plan needs no hub special case
+    (BENCH.md §5h, §8b); this is the evidence that it stays unskewed."""
     from pyspark.sql import functions as F
 
     from accelerating_tc_spark.operators import prep, triangles
@@ -572,11 +572,9 @@ def run_skew() -> None:
     oriented = prep.orient_by_degree(canonical).cache()
     oriented.count()
 
-    def measure_once(hub_threshold):
+    def measure_once():
         t0 = time.time()
-        row = triangles.blocked_task_stats(
-            oriented, n_blocks=16, hub_threshold=hub_threshold
-        ).collect()[0]
+        row = triangles.blocked_task_stats(oriented, n_blocks=16).collect()[0]
         return {
             "wall_s": round(time.time() - t0, 3),
             "triangles": row["triangles"],
@@ -586,38 +584,27 @@ def run_skew() -> None:
             "skew_ratio": round(row["max_task_s"] / max(row["median_task_s"], 1e-9), 1),
         }
 
-    # interleaved min-of-N A/B (the r5 headline protocol): the r2
-    # single-shot comparison's apparent hub-route win was warm-up-order
-    # bias (BENCH.md §5h), and the r3 decision was measured against the
-    # OLD gather-both-sides kernel — the r5 probe-kernel rewrite moved the
-    # baseline, so the crossover is re-measured per round.
     rounds = int(os.environ.get("SPARK_GRAFT_SKEW_ROUNDS", "3"))
-    measure_once(None)  # shared warm-up (codegen/JIT/worker pool)
-    measure_once(100_000)
-    visits: dict[str, list[dict]] = {"off": [], "on": []}
-    for _ in range(rounds):
-        visits["off"].append(measure_once(None))  # default: no hub route
-        visits["on"].append(measure_once(100_000))  # route the mega-hub
-    off = min(visits["off"], key=lambda r: r["wall_s"])
-    on = min(visits["on"], key=lambda r: r["wall_s"])
+    measure_once()  # warm-up (codegen/JIT/worker pool)
+    visits = [measure_once() for _ in range(rounds)]
+    best = min(visits, key=lambda r: r["wall_s"])
+    reference = triangles.triangle_count_blocked(oriented).collect()[0]["triangles"]
     spark.stop()
     print(
         json.dumps(
             {
-                "metric": "tc_blocked_skew_ab",
-                "value": on["wall_s"],
+                "metric": "tc_blocked_skew",
+                "value": best["wall_s"],
                 "unit": "sec",
-                "queries": {"hub_route_on": on["wall_s"], "hub_route_off": off["wall_s"]},
+                "queries": {"tc_blocked_skewed": best["wall_s"]},
                 "sf": _sf_label(SF_DIR),
-                "detail": {"on": on, "off": off, "n_edges": n_edges},
+                "detail": best | {"n_edges": n_edges, "auto_route_triangles": reference},
                 "protocol": {
                     "rounds": rounds,
-                    "stat": "min_per_config_interleaved",
-                    "visits": {
-                        k: [r["wall_s"] for r in vs] for k, vs in visits.items()
-                    },
+                    "stat": "min",
+                    "visits": [r["wall_s"] for r in visits],
                 },
-                "parity": on["triangles"] == off["triangles"],
+                "parity": all(r["triangles"] == reference for r in visits),
             }
         )
     )

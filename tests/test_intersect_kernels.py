@@ -1,5 +1,5 @@
-"""Differential tests of every intersection kernel against the scalar-merge
-oracle, mirroring the reference's `check_result`
+"""Differential tests of the intersection kernels (batch merge and the
+CSR probe) against the scalar-merge oracle, mirroring the reference's `check_result`
 (exp/test_intersection_algos.cpp:102-127) and its randomized parameter grid
 (exp/random_data_generator.cpp:4-45)."""
 
@@ -8,15 +8,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from accelerating_tc_spark.functions.intersect import (
-    bitset_membership_count,
-    bitset_words,
-    intersect_count_adaptive,
-    intersect_count_galloping,
-    intersect_count_pairs,
-    intersect_sorted,
-    pack_bitset,
-)
+from accelerating_tc_spark.functions.csr import CsrShard, intersect_count_csr
+from accelerating_tc_spark.functions.intersect import intersect_count_pairs, intersect_sorted
 
 
 def random_sorted_set(rng, length: int, universe: int) -> np.ndarray:
@@ -39,12 +32,12 @@ def test_kernels_match_scalar_merge(len_a, skew):
     a = random_sorted_set(rng, len_a, universe)
     b = random_sorted_set(rng, len_b, universe)
     expected = len(intersect_sorted(a, b))
-    assert intersect_count_galloping(a, b) == expected
-    assert intersect_count_adaptive(a, b) == expected
     assert intersect_count_pairs([a], [b])[0] == expected
-    if universe < 100_000:
-        bs = pack_bitset(b, bitset_words(universe))
-        assert bitset_membership_count(bs, a) == expected
+    # the blocked plan's probe kernel on a 2-row shard, both probe
+    # directions (it gathers whichever side is smaller)
+    shard = CsrShard.from_lists([0, 1], [a, b])
+    got = intersect_count_csr(shard, np.array([0, 1]), np.array([1, 0]))
+    assert got.tolist() == [expected, expected]
 
 
 def test_batch_kernel_many_pairs():

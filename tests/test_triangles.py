@@ -44,17 +44,27 @@ def test_hub_graph_all_strategies_agree(spark):
 
 
 def test_blocked_broadcast_route_parity(spark, monkeypatch):
-    """n_blocks=None on a small graph engages the r7 broadcast-CSR route;
+    """n_blocks=None on a small graph engages the broadcast-CSR route;
     it must agree with the numpy oracle, with the budget kill switch
     forcing the cogroup plan back on, and with 64-bit sparse ids (the
-    kernel's rank compression)."""
+    kernel's rank compression). Both sides of the gate also assert the
+    route actually chosen."""
     from pyspark.sql import functions as F
 
     from accelerating_tc_spark.operators import triangles as T
+    from accelerating_tc_spark.plans.blocking import auto_n_blocks
+
+    def chosen_blocks(oriented) -> int:
+        _, caches, b = T._blocked_partials(oriented)
+        for c in caches:
+            c.unpersist()
+        return b
 
     pairs = synthetic.powerlaw_edge_pairs(300, 1500, seed=7)
     expected = synthetic.numpy_triangle_count(pairs)
     edges = synthetic.edges_df(spark, pairs.tolist())
+    oriented = prep.orient_by_degree(prep.canonicalize_edges(edges))
+    assert chosen_blocks(oriented) == 1
     assert _count(triangles.count_triangles(edges, strategy="blocked")) == expected
     hashed = edges.select(
         F.xxhash64(F.col("src").cast("string")).alias("src"),
@@ -62,6 +72,9 @@ def test_blocked_broadcast_route_parity(spark, monkeypatch):
     )
     assert _count(triangles.count_triangles(hashed, strategy="blocked")) == expected
     monkeypatch.setattr(T, "_TC_BROADCAST_MAX_BYTES", 0)
+    assert chosen_blocks(oriented) == auto_n_blocks(
+        spark.sparkContext.defaultParallelism, oriented.count()
+    )
     assert _count(triangles.count_triangles(edges, strategy="blocked")) == expected
 
 
@@ -82,45 +95,20 @@ def test_blocked_sparse_64bit_vertex_ids(spark):
     assert got == expected
 
 
-@pytest.mark.parametrize("hub_threshold", [2, 5, 20])
-def test_blocked_hub_route_parity(spark, hub_threshold):
-    """Force the hub route on (low thresholds make MANY vertices hubs —
-    including hub-hub edges and empty-adjacency hubs) and require exact
-    parity with the numpy oracle."""
-    pairs = synthetic.powerlaw_edge_pairs(200, 1200, seed=7)
-    expected = synthetic.numpy_triangle_count(pairs)
-    edges = synthetic.edges_df(spark, pairs.tolist())
-    for nb in (2, 4):
-        got = _count(
-            triangles.count_triangles(
-                edges, strategy="blocked", n_blocks=nb, hub_threshold=hub_threshold
-            )
-        )
-        assert got == expected, f"threshold={hub_threshold} n_blocks={nb}"
-
-
 def test_blocked_mega_hub_parity(spark):
     """Planted mega-hub (one vertex adjacent to half the graph): the
-    default (no hub route) and an explicitly-engaged hub route must both
-    be exact."""
+    cogroup plan needs no hub special case to stay exact."""
     edges = synthetic.hub_edges(spark, n_vertices=300)
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     expected = synthetic.numpy_triangle_count(pairs)
     got = _count(triangles.count_triangles(edges, strategy="blocked", n_blocks=4))
     assert got == expected
-    # explicitly routing the mega-hub must give the same answer
-    got_on = _count(
-        triangles.count_triangles(
-            edges, strategy="blocked", n_blocks=4, hub_threshold=50
-        )
-    )
-    assert got_on == expected
 
 
 def test_blocked_task_stats_schema(spark):
     edges = synthetic.hub_edges(spark, n_vertices=120)
     oriented = prep.orient_by_degree(prep.canonicalize_edges(edges))
-    row = triangles.blocked_task_stats(oriented, n_blocks=2, hub_threshold=10).collect()[0]
+    row = triangles.blocked_task_stats(oriented, n_blocks=2).collect()[0]
     pairs = [(r["src"], r["dst"]) for r in prep.canonicalize_edges(edges).collect()]
     assert row["triangles"] == synthetic.numpy_triangle_count(pairs)
     assert row["n_tasks"] >= 1 and row["max_task_s"] >= row["median_task_s"]
@@ -163,21 +151,3 @@ def test_triangle_count_estimate_unbiased_ballpark(spark):
     # determinism: same coin -> same estimate
     again = triangles.triangle_count_estimate(edges, p=0.5, seed=42).collect()[0]
     assert again["triangles_est"] == row["triangles_est"]
-
-
-def test_hub_route_hostile_threshold_bounded_driver(spark, monkeypatch):
-    """hub_threshold=1 makes EVERY vertex a hub candidate on a large graph:
-    the candidate collect must be bounded by construction (row cap inside
-    the query), the selected set must respect both caps, and the count must
-    still be exact — the escape hatch for the hostile case the cap exists
-    for. A tiny _MAX_HUB_ROWS makes the cap's effect observable."""
-    from accelerating_tc_spark.operators import triangles as T
-
-    monkeypatch.setattr(T, "_MAX_HUB_ROWS", 7)
-    pairs = synthetic.powerlaw_edge_pairs(500, 3000, seed=11)
-    expected = synthetic.numpy_triangle_count(pairs)
-    edges = synthetic.edges_df(spark, pairs.tolist())
-    got = _count(
-        T.count_triangles(edges, strategy="blocked", n_blocks=3, hub_threshold=1)
-    )
-    assert got == expected
