@@ -26,7 +26,8 @@ shuffle instead of re-exchanging ~|E| rows) plus one anti-join against the
 visited set; per-round shuffled bytes are O(|frontier| + |visited|), never
 O(|E|). Rounds = min(max_depth, eccentricity of the seed set) — small on
 web-shaped graphs. Lineage is cut through the shared LineageCutter spine
-(every=8) so the plan stays O(1)-deep across deep traversals.
+(supersteps.CUT_CHAIN_BOUND) so the plan stays O(1)-deep across deep
+traversals.
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def multi_source_distances(
             .join(state, "vertex", "left_anti")
         )
 
-    with supersteps.LineageCutter(spark, every=8, prefix="bfs-cut-") as cutter:
+    with supersteps.LineageCutter(spark) as cutter:
         state = cutter.cut(seeds.select("vertex", F.lit(0).cast("long").alias("dist")))
         frontier = state.select("vertex")
         depth = 0

@@ -78,10 +78,11 @@ def hits_run(
     # each upstream subtree 2-4x — compounding MULTIPLICATIVELY across the
     # lazy rounds between iterate()'s cuts (measured: the sf0.01 contract
     # row fell 405 s -> well under a minute once each score frame is
-    # materialized exactly once per round). The cutter bounds the
-    # localCheckpoint chain with periodic parquet hard cuts (the Spark 4.1
-    # chained-localCheckpoint cliff, see supersteps.LineageCutter).
-    cutter = supersteps.LineageCutter(spark, every=8, prefix="hits-cut-")
+    # materialized exactly once per round). These intra-round cuts and
+    # iterate()'s round cuts go through two cutters; each bounds its own
+    # chain (supersteps.CUT_CHAIN_BOUND), so the interleaved chain stays
+    # well short of the Spark 4.1 chained-localCheckpoint cliff.
+    cutter = supersteps.LineageCutter(spark)
 
     def step(state: DataFrame, i: int) -> DataFrame:
         hub_scores = state.select("vertex", "hub")

@@ -70,9 +70,10 @@ def core_numbers(
     only as the same-session A/B baseline for the bench.
     fixed_rounds: run exactly N materialized rounds with no convergence
     check (bench mode — per-round cost measurement; NOT a fixpoint).
-    max_iterations defaults high (500): rounds are flat-cost (superstep
-    hard cuts bound the lineage chain) and deep peel chains legitimately
-    need hundreds of rounds — one round per remaining peel level."""
+    max_iterations defaults high (500): rounds are flat-cost (the
+    superstep LineageCutter bounds the lineage chain) and deep peel chains
+    legitimately need hundreds of rounds — one round per remaining peel
+    level. The cached symmetrized relation is released before returning."""
     n_part = spark.sparkContext.defaultParallelism
     # Broadcast-state plan (r7, as in labelprop/components): h-index rounds
     # are integer joins + hash aggregates, so on broadcastable-state graphs
@@ -157,7 +158,7 @@ def core_numbers(
             checkpoint_dir=checkpoint_dir,
             on_nonconverged="ignore",
         )
-        return run.state
+        return supersteps.finalize(run, sym).state
 
     run = supersteps.iterate(
         spark,
@@ -169,7 +170,7 @@ def core_numbers(
         checkpoint_dir=checkpoint_dir,
         on_nonconverged="raise",  # exact-semantics operator
     )
-    return run.state
+    return supersteps.finalize(run, sym).state
 
 
 def core_numbers_oracle_sql(edges_cte: str, n_rounds: int = 24) -> str:

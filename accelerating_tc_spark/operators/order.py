@@ -97,11 +97,11 @@ def slashburn_order(
     front, back = 0, n_total - 1
     assignments: list[DataFrame] = []
     # LineageCutter bounds the per-round cut chain: max_rounds=20 chained
-    # localCheckpoints crosses the measured ~15-cut Spark 4.1 cliff
-    # (BENCH.md §6a — geometric per-round degradation); every 8th cut is a
+    # localCheckpoints reaches the measured Spark 4.1 cliff (BENCH.md §6a —
+    # geometric per-round degradation); every CUT_CHAIN_BOUND-th cut is a
     # parquet round-trip instead. The assignments list holds lazy refs to
     # cut states, so cleanup happens once via close(out) at the end.
-    cutter = supersteps.LineageCutter(spark, every=8, prefix="slashburn-cut-")
+    cutter = supersteps.LineageCutter(spark)
     with cutter:
         out = _slashburn_rounds(
             spark, canonical, cutter, assignments, k, max_rounds, front, back
@@ -212,9 +212,10 @@ def bfs_order(
     comps = components.connected_components(spark, canonical)
     # level 0: each component's min vertex (its component label).
     # LineageCutter bounds the per-level cut chain: rounds = diameter can
-    # reach max_rounds=64 — far past the ~15-localCheckpoint Spark 4.1
-    # cliff (BENCH.md §6a) — so every 8th cut is a parquet round-trip.
-    cutter = supersteps.LineageCutter(spark, every=8, prefix="bfs-order-cut-")
+    # reach max_rounds=64 — far past the localCheckpoint-chain Spark 4.1
+    # cliff (BENCH.md §6a) — so every CUT_CHAIN_BOUND-th cut is a parquet
+    # round-trip.
+    cutter = supersteps.LineageCutter(spark)
     with cutter:
         state = cutter.cut(
             comps.select(

@@ -25,8 +25,10 @@ Semantics (re-expressed, deterministic batch form):
 
 Spark shape: the symmetrized edge table is hash-partitioned once and
 cached; every wave is one frontier join + one per-neighbor count aggregate
-+ a localCheckpoint (lineage cut). Total work across all waves is O(|E|):
-each edge's decrement fires exactly once, when its first endpoint peels.
++ a lineage cut through supersteps.LineageCutter, which bounds the cut
+chain like every other loop's (levels can run into the hundreds; BENCH.md
+§6a). Total work across all waves is O(|E|): each edge's decrement fires
+exactly once, when its first endpoint peels.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import prep
+from . import prep, supersteps
 
 
 def peel_priorities(
@@ -57,13 +59,6 @@ def peel_priorities(
     threshold = float(avg)
     step = float(avg) * thre_param / 5.0
 
-    state = deg.select(
-        "vertex",
-        F.col("degree").alias("rdeg"),
-        F.lit(None).cast("long").alias("priority"),
-    ).localCheckpoint(eager=True)
-    level = 0
-
     def assign(st: DataFrame, thr: float, lvl: int) -> DataFrame:
         return st.select(
             "vertex",
@@ -76,60 +71,63 @@ def peel_priorities(
             .alias("priority"),
         )
 
-    while level < max_levels:
-        # outer wave: peel everything at-or-under the current threshold
-        state = assign(state, threshold, level).localCheckpoint(eager=True)
-        n_frontier = state.where(F.col("priority") == level).count()
-        level += 1
-        inner = 0
-        while n_frontier > 0 and inner < inner_rounds and level < max_levels:
-            frontier = state.where(F.col("priority") == level - 1).select("vertex")
-            dec = (
-                sym.join(frontier.withColumnRenamed("vertex", "src"), "src")
-                .groupBy(F.col("dst").alias("vertex"))
-                .agg(F.count(F.lit(1)).alias("_dec"))
+    def decrement(st: DataFrame, frontier_level: int) -> DataFrame:
+        # unpeeled vertices lose one runtime degree per neighbor peeled at
+        # `frontier_level`
+        frontier = st.where(F.col("priority") == frontier_level).select("vertex")
+        dec = (
+            sym.join(frontier.withColumnRenamed("vertex", "src"), "src")
+            .groupBy(F.col("dst").alias("vertex"))
+            .agg(F.count(F.lit(1)).alias("_dec"))
+        )
+        return st.join(dec, "vertex", "left").select(
+            "vertex",
+            F.when(
+                F.col("priority").isNull(),
+                F.col("rdeg") - F.coalesce("_dec", F.lit(0)),
             )
-            decremented = state.join(dec, "vertex", "left").select(
+            .otherwise(F.col("rdeg"))
+            .alias("rdeg"),
+            "priority",
+        )
+
+    with supersteps.LineageCutter(spark) as cutter:
+        state = cutter.cut(
+            deg.select(
                 "vertex",
-                F.when(
-                    F.col("priority").isNull(),
-                    F.col("rdeg") - F.coalesce("_dec", F.lit(0)),
-                )
-                .otherwise(F.col("rdeg"))
-                .alias("rdeg"),
-                "priority",
+                F.col("degree").alias("rdeg"),
+                F.lit(None).cast("long").alias("priority"),
             )
-            state = assign(decremented, threshold, level).localCheckpoint(eager=True)
+        )
+        level = 0
+        while level < max_levels:
+            # outer wave: peel everything at-or-under the current threshold
+            state = cutter.cut(assign(state, threshold, level))
             n_frontier = state.where(F.col("priority") == level).count()
             level += 1
-            inner += 1
-        if n_frontier > 0:
-            # inner cap hit with a live frontier: the final wave's peeled
-            # vertices still owe their unpeeled neighbors their decrements —
-            # apply them (without opening a new wave at this threshold) so
-            # runtime degrees stay exact across the threshold bump and the
-            # "every edge decrements exactly once" invariant holds
-            frontier = state.where(F.col("priority") == level - 1).select("vertex")
-            dec = (
-                sym.join(frontier.withColumnRenamed("vertex", "src"), "src")
-                .groupBy(F.col("dst").alias("vertex"))
-                .agg(F.count(F.lit(1)).alias("_dec"))
-            )
-            state = state.join(dec, "vertex", "left").select(
-                "vertex",
-                F.when(
-                    F.col("priority").isNull(),
-                    F.col("rdeg") - F.coalesce("_dec", F.lit(0)),
-                )
-                .otherwise(F.col("rdeg"))
-                .alias("rdeg"),
-                "priority",
-            ).localCheckpoint(eager=True)
-        if state.where(F.col("priority").isNull()).count() == 0:
-            break
-        threshold += step
+            inner = 0
+            while n_frontier > 0 and inner < inner_rounds and level < max_levels:
+                state = cutter.cut(assign(decrement(state, level - 1), threshold, level))
+                n_frontier = state.where(F.col("priority") == level).count()
+                level += 1
+                inner += 1
+            if n_frontier > 0:
+                # inner cap hit with a live frontier: the final wave's peeled
+                # vertices still owe their unpeeled neighbors their decrements —
+                # apply them (without opening a new wave at this threshold) so
+                # runtime degrees stay exact across the threshold bump and the
+                # "every edge decrements exactly once" invariant holds
+                state = cutter.cut(decrement(state, level - 1))
+            if state.where(F.col("priority").isNull()).count() == 0:
+                break
+            threshold += step
 
-    return state.select("vertex", "priority", F.col("rdeg").alias("runtime_degree"))
+        # the cut state no longer reads `sym`; close() re-anchors it if it
+        # reads a scratch slot
+        sym.unpersist()
+        return cutter.close(
+            state.select("vertex", "priority", F.col("rdeg").alias("runtime_degree"))
+        )
 
 
 def orient_by_peel(canonical: DataFrame, priorities: DataFrame) -> DataFrame:

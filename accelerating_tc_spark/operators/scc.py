@@ -141,7 +141,7 @@ def strongly_connected_components(
         .distinct()
     )
     assigned: list[DataFrame] = []
-    with supersteps.LineageCutter(spark, prefix="scc-cut-") as cutter:
+    with supersteps.LineageCutter(spark) as cutter:
         e = cutter.cut(e)
         verts = cutter.cut(
             e.select(F.col("src").alias("vertex"))

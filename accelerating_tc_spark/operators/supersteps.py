@@ -12,9 +12,9 @@ Scale/correctness posture:
 - a `lineage` metrics file records per-iteration row counts, per-partition
   row distribution (spark_partition_id), wall time, and the convergence
   delta — the "per-partition lineage + metrics" of the north rule,
-- lineage is CUT every round (reload from the checkpoint we just wrote, or
-  localCheckpoint when unpersisted) so Catalyst plans don't grow with the
-  iteration count — the classic iterative-Spark failure mode.
+- lineage is cut every round (checkpoint read-back, else a LineageCutter
+  cut; unmetered fixed-round loops only every `checkpoint_every` rounds) so
+  plans don't grow with the iteration count — the classic Spark failure.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 import time
 import warnings
 from collections.abc import Callable
@@ -55,9 +56,10 @@ def broadcast_state_ok(n_edges: int | None) -> bool:
 @dataclass
 class IterationMetrics:
     iteration: int
-    rows: int
-    n_partitions: int
-    partition_rows: dict[str, int]
+    # None unless a checkpoint dir asked for durable lineage (not measured)
+    rows: int | None
+    n_partitions: int | None
+    partition_rows: dict[str, int] | None
     wall_s: float
     delta: float | None
 
@@ -121,40 +123,60 @@ def latest_checkpoint(checkpoint_dir: str) -> int | None:
     return snapshots.ParquetIterationLog(None, checkpoint_dir).latest()
 
 
+# Every CUT_CHAIN_BOUND-th LineageCutter cut in a row is a parquet hard cut,
+# so at most CUT_CHAIN_BOUND - 1 localCheckpoints chain. Longer chains
+# degrade GEOMETRICALLY on Spark 4.1 (BENCH.md §6a: a 100k-edge k-core loop
+# ran flat 0.65-1.7 s rounds for 19 chained cuts, then each round took ~2.5x
+# the last, 3.1 s to 39 s in four rounds; parquet cuts stay flat for 100+
+# rounds). Without a `root` hard cuts land in a process-local tempdir — on a
+# multi-node cluster give long `iterate` loops a `checkpoint_dir` on shared
+# storage so every executor and a resuming driver can read the cut back.
+CUT_CHAIN_BOUND = 8
+
+
 class LineageCutter:
-    """Bounded-chain lineage cuts for hand-rolled loops (the same cliff
-    `iterate(hard_cut_every=...)` guards against: chains of ~15+
-    consecutive localCheckpoints degrade geometrically on Spark 4.1).
+    """The engine's one lineage-cut implementation: localCheckpoint chains
+    broken by a parquet hard cut every CUT_CHAIN_BOUND cuts.
 
-    Up to `every - 1` consecutive cuts use localCheckpoint; the next cut is
-    a parquet round-trip through a scratch slot. Slots get UNIQUE names and
-    live until `close()` — callers may hold lazy references to any cut
-    state (e.g. the truss cascade's per-round dropped frames) without them
-    being invalidated by slot reuse. `close(final_df)` re-anchors the final
-    result in block storage before removing the scratch dir, so the
-    returned DataFrame outlives the cleanup."""
+    Hard-cut slots live in `root` when given (created on the first hard
+    cut, removed by `close()` — the cutter owns it), else in a fresh
+    tempdir. Slots get UNIQUE names and live until `close()`, so callers
+    may hold lazy references to any cut state (e.g. the truss cascade's
+    per-round dropped frames); a loop that holds none (`iterate`) calls
+    `drop_stale_slots()` to keep scratch at two states. `close(final_df)`
+    re-anchors the final result in block storage before removing the
+    scratch dir, so the returned DataFrame outlives the cleanup."""
 
-    def __init__(self, spark: SparkSession, every: int = 8, prefix: str = "lineage-cut-"):
+    def __init__(self, spark: SparkSession, root: str | None = None):
         self.spark = spark
-        self.every = every
-        self.prefix = prefix
-        self.chain = 0
+        self.root = root
+        self.chain = 0  # consecutive localCheckpoint cuts since a hard cut
         self.n_cuts = 0
         self.scratch: str | None = None
+        self.slots: list[str] = []
 
-    def cut(self, df: DataFrame) -> DataFrame:
-        import tempfile
-
+    def cut(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """`eager=False` leaves a localCheckpoint cut unmaterialized until
+        the caller's next action on it; a hard cut is always written."""
         self.n_cuts += 1
-        if self.every and self.chain + 1 >= self.every:
+        if self.chain + 1 >= CUT_CHAIN_BOUND:
             if self.scratch is None:
-                self.scratch = tempfile.mkdtemp(prefix=self.prefix)
+                self.scratch = self.root or tempfile.mkdtemp(prefix="lineage-cut-")
+                os.makedirs(self.scratch, exist_ok=True)
             slot = os.path.join(self.scratch, f"slot{self.n_cuts:05d}")
             df.write.mode("overwrite").parquet(slot)
+            self.slots.append(slot)
             self.chain = 0
             return self.spark.read.parquet(slot)
         self.chain += 1
-        return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=eager)
+
+    def drop_stale_slots(self) -> None:
+        """Remove all hard-cut slots but the two newest (the current state
+        and the one a convergence probe compares it with) — only for loops
+        that hold no other reference to earlier cut states."""
+        while len(self.slots) > 2:
+            shutil.rmtree(self.slots.pop(0), ignore_errors=True)
 
     def close(self, final_df: DataFrame | None = None) -> DataFrame | None:
         out = final_df
@@ -165,6 +187,7 @@ class LineageCutter:
                 out = final_df.localCheckpoint(eager=True)
             shutil.rmtree(self.scratch, ignore_errors=True)
             self.scratch = None
+            self.slots = []
         return out
 
     # context-manager form: `with LineageCutter(...) as cutter:` guarantees
@@ -190,7 +213,6 @@ def iterate(
     checkpoint_every: int = 1,
     resume: bool = True,
     on_nonconverged: str = "warn",
-    hard_cut_every: int = 8,
     keep_checkpoints: int | None = None,
 ) -> SuperstepRun:
     """Run `state <- step(state, i)` with checkpointing, lineage metrics, resume.
@@ -204,31 +226,19 @@ def iterate(
       still above tolerance — "warn" (default), "raise" (exact-semantics
       operators: returning a non-fixpoint state would be silently wrong), or
       "ignore".
-    - `hard_cut_every`: maximum consecutive localCheckpoint lineage cuts
-      before a parquet round-trip hard cut. Long chains of localCheckpoints
-      degrade GEOMETRICALLY on Spark 4.1 (measured: per-round wall flat for
-      ~15 chained cuts, then ×2.5 per round — 0.7s rounds reach 80s+ by
-      round 22 on a 100k-edge k-core loop; a parquet-cut chain is flat for
-      100+ rounds on the same job), so any convergence loop that can run
-      tens of rounds MUST bound the chain. The hard cut writes to
-      `checkpoint_dir` when given, else to a process-local scratch dir
-      (tempfile) that is removed when the loop ends — on a multi-node
-      cluster pass `checkpoint_dir` on shared storage for loops expected to
-      exceed ~15 rounds so the hard cut lands somewhere all executors and
-      any resuming driver can read.
+    - lineage between commits is cut through one LineageCutter, whose
+      hard cuts land under `<checkpoint_dir>/_scratch` when a checkpoint
+      dir is given (see CUT_CHAIN_BOUND); its scratch holds at most two
+      states and is removed when the loop ends.
     - `keep_checkpoints`: retention bound for the checkpoint dir (>= 2) —
       after each committed round, iteration snapshots older than the newest
       `keep_checkpoints` are dropped (snapshots.ParquetIterationLog.prune;
       Iceberg's expire_snapshots in the swap). None keeps every round.
       Resume still works: it continues from the newest surviving snapshot."""
-    import tempfile
-
     metrics: list[IterationMetrics] = []
     start_iter = 0
     state = initial
     state_cut = False  # True while `state` is lineage-cut AND materialized
-    scratch_dir: str | None = None
-    chain_len = 0  # consecutive localCheckpoint cuts since the last hard cut
 
     ckpt_log = None
     if checkpoint_dir:
@@ -244,103 +254,86 @@ def iterate(
 
     converged = False
     lineage_path = os.path.join(checkpoint_dir, "lineage.jsonl") if checkpoint_dir else None
+    # with a checkpoint_dir the hard-cut slots live under it (shared storage
+    # on a cluster — executors must be able to read the cut back); only
+    # dir-less in-memory loops fall back to a local tempdir
+    scratch_root = os.path.join(checkpoint_dir, "_scratch") if checkpoint_dir else None
 
-    for i in range(start_iter, max_iterations):
-        t0 = time.time()
-        new_state = step(state, i)
+    with LineageCutter(spark, root=scratch_root) as cutter:
+        for i in range(start_iter, max_iterations):
+            t0 = time.time()
+            new_state = step(state, i)
 
-        state_cut = True
-        if ckpt_log and (i % checkpoint_every == 0 or i == max_iterations - 1):
-            # durable commit + lineage cut: read back the written snapshot
-            persisted = ckpt_log.write(new_state, i)
-            chain_len = 0
-        elif (
-            delta_fn is None
-            and checkpoint_dir is None
-            and i % checkpoint_every != checkpoint_every - 1
-            and i != max_iterations - 1
-        ):
-            # unmetered fixed-round mode: rounds between lineage cuts stay
-            # lazy-chained — skipping the eager materialization removes a
-            # full job per skipped round (the dominant per-round constant
-            # for small states); the plan depth is bounded by
-            # checkpoint_every so Catalyst analysis stays O(1) per round
-            persisted = new_state
-            state_cut = False
-        elif hard_cut_every and chain_len + 1 >= hard_cut_every:
-            # parquet hard cut: bound the localCheckpoint chain (see
-            # hard_cut_every docstring) — alternate two scratch slots so
-            # the slot being overwritten is never the one being read.
-            # With a checkpoint_dir the slots live under it (shared storage
-            # on a cluster — executors must be able to read the cut back);
-            # only dir-less in-memory loops fall back to a local tempdir.
-            if scratch_dir is None:
-                if checkpoint_dir:
-                    scratch_dir = os.path.join(checkpoint_dir, "_scratch")
-                    os.makedirs(scratch_dir, exist_ok=True)
-                else:
-                    scratch_dir = tempfile.mkdtemp(prefix="superstep-scratch-")
-            slot = os.path.join(scratch_dir, f"slot{(i // hard_cut_every) % 2}")
-            new_state.write.mode("overwrite").parquet(slot)
-            persisted = spark.read.parquet(slot)
-            chain_len = 0
-        else:
-            # convergence mode: the delta probe below runs an action on
-            # `persisted` right away, so a LAZY checkpoint lets that single
-            # action materialize the blocks — one job per round instead of
-            # an eager-materialize job plus the probe job (r7; measured on
-            # the SCC inner loop, whose many short rounds are job-overhead
-            # bound). Without a probe the eager cut keeps its job.
-            persisted = new_state.localCheckpoint(eager=delta_fn is None)
-            chain_len += 1
+            state_cut = True
+            if ckpt_log and (i % checkpoint_every == 0 or i == max_iterations - 1):
+                # durable commit + lineage cut: read back the written snapshot
+                persisted = ckpt_log.write(new_state, i)
+                cutter.chain = 0
+            elif (
+                delta_fn is None
+                and checkpoint_dir is None
+                and i % checkpoint_every != checkpoint_every - 1
+                and i != max_iterations - 1
+            ):
+                # unmetered fixed-round mode: rounds between lineage cuts stay
+                # lazy-chained — skipping the eager materialization removes a
+                # full job per skipped round (the dominant per-round constant
+                # for small states); the plan depth is bounded by
+                # checkpoint_every so Catalyst analysis stays O(1) per round
+                persisted = new_state
+                state_cut = False
+            else:
+                # convergence mode: the delta probe below runs an action on
+                # `persisted` right away, so a LAZY checkpoint lets that single
+                # action materialize the blocks — one job per round instead of
+                # an eager-materialize job plus the probe job (r7; measured on
+                # the SCC inner loop, whose many short rounds are job-overhead
+                # bound). Without a probe the eager cut keeps its job.
+                persisted = cutter.cut(new_state, eager=delta_fn is None)
+                cutter.drop_stale_slots()
 
-        delta = delta_fn(state, persisted) if delta_fn is not None else None
-        # per-partition lineage histogram: one extra job per round, recorded
-        # only when a checkpoint dir asked for durable lineage — unmetered
-        # in-memory loops (bench hot paths) skip the pass entirely
-        if lineage_path:
-            hist = _partition_histogram(persisted)
-        else:
-            hist = {}
-        m = IterationMetrics(
-            iteration=i,
-            rows=sum(hist.values()),
-            n_partitions=len(hist),
-            partition_rows=hist,
-            wall_s=round(time.time() - t0, 3),
-            delta=delta,
-        )
-        metrics.append(m)
-        if lineage_path:
-            with open(lineage_path, "a") as fh:
-                fh.write(json.dumps(m.__dict__) + "\n")
+            delta = delta_fn(state, persisted) if delta_fn is not None else None
+            # per-partition lineage histogram: one extra job per round,
+            # recorded only when a checkpoint dir asked for durable lineage —
+            # unmetered in-memory loops (bench hot paths) skip the pass
+            hist = _partition_histogram(persisted) if lineage_path else None
+            m = IterationMetrics(
+                iteration=i,
+                rows=None if hist is None else sum(hist.values()),
+                n_partitions=None if hist is None else len(hist),
+                partition_rows=hist,
+                wall_s=round(time.time() - t0, 3),
+                delta=delta,
+            )
+            metrics.append(m)
+            if lineage_path:
+                with open(lineage_path, "a") as fh:
+                    fh.write(json.dumps(m.__dict__) + "\n")
 
-        state = persisted
-        if ckpt_log and keep_checkpoints:
-            # prune AFTER delta_fn ran and `state` was rebound: the old
-            # state frame (previous round's snapshot) is no longer read
-            ckpt_log.prune(keep_checkpoints)
-        if delta is not None and delta <= tolerance:
-            converged = True
-            break
+            state = persisted
+            if ckpt_log and keep_checkpoints:
+                # prune AFTER delta_fn ran and `state` was rebound: the old
+                # state frame (previous round's snapshot) is no longer read
+                ckpt_log.prune(keep_checkpoints)
+            if delta is not None and delta <= tolerance:
+                converged = True
+                break
 
-    if delta_fn is not None and not converged and metrics:
-        msg = (
-            f"superstep loop hit max_iterations={max_iterations} with "
-            f"delta={metrics[-1].delta} > tolerance={tolerance}; state is NOT a fixpoint"
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
+        if delta_fn is not None and not converged and metrics:
+            msg = (
+                f"superstep loop hit max_iterations={max_iterations} with "
+                f"delta={metrics[-1].delta} > tolerance={tolerance}; state is NOT a fixpoint"
+            )
+            if on_nonconverged == "raise":
+                raise RuntimeError(msg)
+            if on_nonconverged == "warn":
+                warnings.warn(msg, RuntimeWarning, stacklevel=2)
 
-    if scratch_dir is not None:
-        # the final state may be backed by a scratch slot: re-anchor it
-        # in block storage (a 1-link localCheckpoint chain is safe) before
-        # removing the scratch dir
-        state = state.localCheckpoint(eager=True)
-        state_cut = True
-        shutil.rmtree(scratch_dir, ignore_errors=True)
+        if cutter.scratch is not None:
+            # close() re-anchors a state that may read a scratch slot in
+            # block storage (a 1-link localCheckpoint chain is safe)
+            state_cut = True
+        state = cutter.close(state)
 
     return SuperstepRun(
         state=state,

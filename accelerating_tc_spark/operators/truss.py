@@ -143,7 +143,7 @@ def ktruss(
     if k < 3:
         return canonical
     # context manager: a failed deep cascade must not leak parquet scratch
-    with supersteps.LineageCutter(spark, prefix="ktruss-") as cutter:
+    with supersteps.LineageCutter(spark) as cutter:
         state = cutter.cut(edge_support(canonical))
         state, _dropped = _peel_level(state, k, max_rounds, cutter)
         return cutter.close(state.select("src", "dst"))
@@ -207,7 +207,7 @@ def truss_numbers(
     level_jump=False steps k one at a time (the pre-jump cascade, kept as
     the same-session A/B baseline for bench --truss)."""
     # context manager: a failed deep cascade must not leak parquet scratch
-    with supersteps.LineageCutter(spark, prefix="truss-") as cutter:
+    with supersteps.LineageCutter(spark) as cutter:
         state = cutter.cut(edge_support(canonical))
         labeled: list[DataFrame] = []
         k = 3

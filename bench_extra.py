@@ -213,11 +213,11 @@ def _bfs_round_plan(spark, canonical) -> str:
     calls = {"n": 0}
     real_cut = supersteps.LineageCutter.cut
 
-    def trap_cut(self, df):
+    def trap_cut(self, df, eager=True):
         calls["n"] += 1
         if calls["n"] >= 3:
             raise _PlanCaptured(df)
-        return real_cut(self, df)
+        return real_cut(self, df, eager)
 
     supersteps.LineageCutter.cut = trap_cut
     try:

@@ -7,11 +7,18 @@ import numpy as np
 import pytest
 
 from accelerating_tc_spark.operators import (
+    bfs,
+    bowtie,
     components,
+    hits,
     kcore,
     labelprop,
+    order,
     pagerank,
+    peel,
     prep,
+    scc,
+    truss,
 )
 from accelerating_tc_spark.sources import synthetic
 
@@ -293,17 +300,19 @@ def test_pagerank_checkpoint_resume(spark, graph, tmp_path):
     assert len(lineage) >= 10
 
 
-def test_lineage_cutter_bounds_chains_and_survives_close(spark):
-    """LineageCutter: every `every`-th cut is a parquet hard cut whose
-    scratch slots are unique (lazy refs to earlier cut states stay valid),
-    and close(final) re-anchors the result so it outlives the scratch dir."""
+def test_lineage_cutter_bounds_chains_and_survives_close(spark, monkeypatch):
+    """LineageCutter: every CUT_CHAIN_BOUND-th cut is a parquet hard cut
+    whose scratch slots are unique (lazy refs to earlier cut states stay
+    valid), and close(final) re-anchors the result so it outlives the
+    scratch dir."""
     import os
 
     from pyspark.sql import functions as F
 
     from accelerating_tc_spark.operators import supersteps
 
-    cutter = supersteps.LineageCutter(spark, every=3, prefix="test-cutter-")
+    monkeypatch.setattr(supersteps, "CUT_CHAIN_BOUND", 3)
+    cutter = supersteps.LineageCutter(spark)
     state = spark.range(0, 100).select(F.col("id").alias("v"))
     kept = []
     for i in range(7):
@@ -320,7 +329,7 @@ def test_lineage_cutter_bounds_chains_and_survives_close(spark):
     assert final.agg(F.min("v")).first()[0] == 7
 
 
-def test_lineage_cutter_context_manager_cleans_on_exception(spark):
+def test_lineage_cutter_context_manager_cleans_on_exception(spark, monkeypatch):
     """`with LineageCutter(...)` removes the scratch dir when the body
     raises (the r4 leak: a failed deep cascade left parquet scratch on
     disk), and stays a no-op after an explicit close()."""
@@ -330,9 +339,10 @@ def test_lineage_cutter_context_manager_cleans_on_exception(spark):
 
     from accelerating_tc_spark.operators import supersteps
 
+    monkeypatch.setattr(supersteps, "CUT_CHAIN_BOUND", 1)
     scratch_seen = None
     try:
-        with supersteps.LineageCutter(spark, every=1, prefix="test-ctx-") as cutter:
+        with supersteps.LineageCutter(spark) as cutter:
             cutter.cut(spark.range(10).select(F.col("id").alias("v")))
             scratch_seen = cutter.scratch
             assert scratch_seen is not None and os.path.isdir(scratch_seen)
@@ -342,10 +352,120 @@ def test_lineage_cutter_context_manager_cleans_on_exception(spark):
     assert not os.path.isdir(scratch_seen)
 
     # success path: close(final) already cleaned; __exit__ must not break
-    with supersteps.LineageCutter(spark, every=1, prefix="test-ctx2-") as cutter:
+    with supersteps.LineageCutter(spark) as cutter:
         st = cutter.cut(spark.range(5).select(F.col("id").alias("v")))
         final = cutter.close(st)
     assert final.count() == 5
+
+
+def _counter_state(spark):
+    from pyspark.sql import functions as F
+
+    return spark.range(5).select(F.col("id").alias("vertex"), F.lit(0).alias("val"))
+
+
+def _increment(state, i):
+    from pyspark.sql import functions as F
+
+    return state.withColumn("val", F.col("val") + 1)
+
+
+def test_iterate_hard_cuts_never_overwrite_a_live_slot(spark, monkeypatch):
+    """Regression: with a chain bound of 1 and checkpoint_every=2, the old
+    two-slot hard cut mapped rounds 1, 3 and 5 to the same scratch slot, so
+    round 3 overwrote the parquet files its own input was reading and Spark
+    failed with FAILED_READ_FILE.FILE_NOT_EXIST."""
+    from accelerating_tc_spark.operators import supersteps
+
+    monkeypatch.setattr(supersteps, "CUT_CHAIN_BOUND", 1)
+    run = supersteps.iterate(
+        spark, _counter_state(spark), _increment, max_iterations=6, checkpoint_every=2
+    )
+    assert {r["vertex"]: r["val"] for r in run.state.collect()} == {v: 6 for v in range(5)}
+
+
+@pytest.mark.parametrize("mode", ["eager", "lazy", "checkpoint_dir"])
+def test_iterate_bounds_cut_chain(spark, monkeypatch, tmp_path, cut_log, mode):
+    """Deterministic chain bound (walls swing 2-5x on shared boxes): over
+    more than twice the bound in rounds, no more than CUT_CHAIN_BOUND - 1
+    localCheckpoints chain between parquet writes in each of iterate's
+    three cut modes. The bound is patched small to keep the rounds cheap."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from accelerating_tc_spark.operators import supersteps
+
+    bound = 3
+    monkeypatch.setattr(supersteps, "CUT_CHAIN_BOUND", bound)
+    n_rounds = 15
+    ckpt = str(tmp_path / "ckpt") if mode == "checkpoint_dir" else None
+    scratch = os.path.join(ckpt, "_scratch") if ckpt else None
+    max_slots = [0]
+
+    def step(state, i):
+        if scratch and os.path.isdir(scratch):
+            max_slots[0] = max(max_slots[0], len(os.listdir(scratch)))
+        return _increment(state, i)
+
+    kwargs = {
+        # fixed rounds, every round cut eagerly
+        "eager": dict(checkpoint_every=1),
+        # convergence mode: the delta probe materializes each lazy cut
+        "lazy": dict(
+            delta_fn=lambda old, new: float(new.agg(F.sum("val")).first()[0]),
+            on_nonconverged="ignore",
+        ),
+        # commits every 5th round, cutter cuts in between
+        "checkpoint_dir": dict(checkpoint_dir=ckpt, checkpoint_every=5),
+    }[mode]
+    run = supersteps.iterate(
+        spark, _counter_state(spark), step, max_iterations=n_rounds, **kwargs
+    )
+    assert run.iterations == n_rounds
+    assert {r["vertex"]: r["val"] for r in run.state.collect()} == {
+        v: n_rounds for v in range(5)
+    }
+    assert n_rounds > 2 * bound
+    assert 0 < cut_log.longest_local_chain() <= bound - 1
+    if mode == "checkpoint_dir":
+        # hard cuts in rounds 3, 8 and 13 land under <checkpoint_dir>/_scratch;
+        # at most two of them exist at once, and none after the loop
+        assert len([e for e in cut_log if e.startswith(scratch)]) == 3
+        assert max_slots[0] == 2
+        assert not os.path.exists(scratch)
+
+
+_OPERATOR_CALLS = {
+    "pagerank_run": lambda s, c, e: pagerank.pagerank_run(s, c, n_iterations=5).state,
+    "connected_components": lambda s, c, e: components.connected_components(s, c),
+    "label_propagation_run": lambda s, c, e: labelprop.label_propagation_run(
+        s, c, n_iterations=3
+    ).state,
+    "hits_run": lambda s, c, e: hits.hits_run(s, e, n_iterations=4).state,
+    "strongly_connected_components": lambda s, c, e: scc.strongly_connected_components(s, e),
+    "multi_source_distances": lambda s, c, e: bfs.multi_source_distances(s, e, [0, 1]),
+    "truss_numbers": lambda s, c, e: truss.truss_numbers(s, c),
+    "ktruss": lambda s, c, e: truss.ktruss(s, c, k=4),
+    "slashburn_order": lambda s, c, e: order.slashburn_order(s, c),
+    "bfs_order": lambda s, c, e: order.bfs_order(s, c),
+    "bowtie_classes": lambda s, c, e: bowtie.bowtie_classes(s, e),
+    "core_numbers": lambda s, c, e: kcore.core_numbers(s, c),
+    "core_numbers_fixed_rounds": lambda s, c, e: kcore.core_numbers(s, c, fixed_rounds=3),
+    "peel_priorities": lambda s, c, e: peel.peel_priorities(s, c),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_OPERATOR_CALLS))
+def test_loop_operator_leaves_no_cached_relation(spark, graph, name):
+    """Every iterative operator releases the relations it caches: a
+    repeated-pass caller must not accumulate cached helper sets."""
+    pairs, canonical = graph
+    edges = synthetic.edges_df(spark, pairs)
+    spark.catalog.clearCache()
+    out = _OPERATOR_CALLS[name](spark, canonical, edges)
+    assert out.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_checkpoint_retention_keep_last_k(spark, tmp_path):

@@ -109,3 +109,26 @@ def test_peel_vs_degree_balance_row(spark):
     assert row["peel_balance_cost"] >= 0.0
     assert row["degree_balance_cost"] >= 0.0
     assert row["n_levels"] >= 1
+
+
+def test_peel_bounds_cut_chain_on_planted_clique(spark, cut_log):
+    """A 12-clique with a 20-edge tail peels in 23 levels at thre_param
+    0.25, more than twice the chain bound, yet no more than
+    CUT_CHAIN_BOUND - 1 localCheckpoints chain between parquet hard cuts,
+    and the priorities still match the python oracle."""
+    import itertools
+
+    from accelerating_tc_spark.operators import supersteps
+
+    pairs = list(itertools.combinations(range(12), 2)) + [(11 + i, 12 + i) for i in range(20)]
+    expected = py_peel(pairs, thre_param=0.25)
+    n_levels = max(expected.values()) + 1
+    assert n_levels >= 2 * supersteps.CUT_CHAIN_BOUND
+    canonical = prep.canonicalize_edges(synthetic.edges_df(spark, pairs))
+    got = {
+        r["vertex"]: r["priority"]
+        for r in peel.peel_priorities(spark, canonical, thre_param=0.25).collect()
+    }
+    assert got == expected
+    assert len([e for e in cut_log if e != "L"]) >= 2
+    assert 0 < cut_log.longest_local_chain() <= supersteps.CUT_CHAIN_BOUND - 1
